@@ -21,46 +21,10 @@ from __future__ import annotations
 
 import os
 
-import numpy as np
 import pyarrow as pa
 
 from ..columns import decode_column
 from ..plans import manifest as M
-
-
-def make_decode_fn(schema: pa.Schema, symtabs: dict[int, list[bytes]],
-                   columns: list[str] | None, verify_crc: bool = True):
-    names = columns or schema.names
-    out_schema = pa.schema([schema.field(n) for n in names])
-    ctx = {"symtabs": symtabs}
-
-    def fn(batches):
-        from ..codecs.gather import warm_heap
-        from ..columns import content_crc
-
-        warm_heap()
-        for b in batches:
-            blobs = {n: b.column(f"c_{n}") for n in names}
-            crcs = {n: b.column(f"crc_{n}") for n in names} if verify_crc else {}
-            for i in range(b.num_rows):
-                arrays = []
-                for n in names:
-                    blob = blobs[n][i].as_buffer()
-                    arr = decode_column(blob, out_schema.field(n).type, ctx)
-                    if verify_crc:
-                        want = crcs[n][i].as_py()
-                        if want is not None:
-                            if want < 0:
-                                want += 1 << 64
-                            got = content_crc(arr)
-                            if got != want:
-                                raise ValueError(
-                                    f"checksum mismatch decoding column {n!r}: "
-                                    f"manifest={want} decoded={got} — block is corrupt")
-                    arrays.append(arr)
-                yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
-
-    return fn
 
 
 def decode_table(spark, out_dir: str, columns: list[str] | None = None,
@@ -73,50 +37,12 @@ def decode_table(spark, out_dir: str, columns: list[str] | None = None,
     any decode work. NOTE: pruning is block-level; callers still apply the
     exact row-level predicate afterwards.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    import glob as _glob
-
-    schema, symtabs, _ = M.read_meta(out_dir)
-    if columns:
-        for c in columns:
-            if c not in schema.names:
-                raise KeyError(f"unknown column {c}")
-    bdir = M.blocks_dir(out_dir)
-    if not _glob.glob(os.path.join(bdir, "*.parquet")):
-        # zero-row table: the encode job had no tasks, so no block files
-        out_fields = [schema.field(n) for n in (columns or schema.names)]
-        return spark.createDataFrame([], from_arrow_schema(pa.schema(out_fields)))
-    blocks = spark.read.parquet(bdir)
-    if zone_filters:
-        # zone maps are plain top-level columns: the predicate pushes down
-        # to the parquet scan and prunes whole row groups via their stats —
-        # the cluster-scale descendant of the reference's cheap AABB
-        # pre-filter before expensive work (JtsAdapter.java:232)
-        for col, lo, hi in zone_filters:
-            blocks = blocks.filter(
-                F.col(f"mn_{col}").isNull()
-                | ((F.col(f"mn_{col}") <= F.lit(int(hi)))
-                   & (F.col(f"mx_{col}") >= F.lit(int(lo)))))
-    if columns:
-        for c in columns:
-            if c not in schema.names:
-                raise KeyError(f"unknown column {c}")
-    names = columns or schema.names
-    need = ["part_id", "block_id", "n_rows"] + [f"c_{n}" for n in names]
-    if verify_crc:
-        need += [f"crc_{n}" for n in names]
-    # explicit projection -> parquet reads ONLY the requested blob columns
-    blocks = blocks.select(*need)
-    out_fields = [schema.field(n) for n in names]
-    spark_schema = from_arrow_schema(pa.schema(out_fields))
-    return blocks.mapInArrow(
-        make_decode_fn(schema, symtabs, columns, verify_crc), spark_schema)
+    return decode_table_multi(spark, [out_dir], columns, zone_filters,
+                              verify_crc)
 
 
 def _norm_file_dir(path: str) -> str:
-    """Normalize a Spark ``input_file_name()`` URI to the realpath of its
+    """Normalize a Spark ``_metadata.file_path`` URI to the realpath of its
     parent directory (the segment's blocks dir) for symtab-namespace lookup."""
     from urllib.parse import unquote, urlparse
 
@@ -129,7 +55,7 @@ def make_multi_decode_fn(schema: pa.Schema,
                          symtabs_by_dir: dict[str, dict[int, list[bytes]]],
                          columns: list[str] | None, verify_crc: bool = True):
     """Decode fn for blocks drawn from MANY segments in one scan: the last
-    input column is the block's source file (``input_file_name``), which
+    input column is the block's source file (``_metadata.file_path``), which
     selects the segment's symbol-table namespace. Per-ROW lookup cost is
     negligible — each row is a whole encoded block, and a scan partition
     rarely mixes files anyway."""
@@ -186,17 +112,21 @@ def decode_table_multi(spark, seg_dirs: list[str],
     """Decode MANY encoded tables (streaming segments) as ONE DataFrame with
     a plan whose depth does not grow with the segment count.
 
-    A union-of-``decode_table`` plan is O(#segments) deep — fine at 3
-    segments, but a year of micro-batches (10^4-10^5 segments) would melt
-    the analyzer before any task runs. Here the union happens at the FILE
-    LISTING level instead: one parquet scan over every segment's block
-    files, one ``mapInArrow``, with ``input_file_name()`` carrying each
+    A plan-level union of per-segment scans is O(#segments) deep — fine at
+    3 segments, but a year of micro-batches (10^4-10^5 segments) would
+    melt the analyzer before any task runs. Here the union happens at the
+    FILE LISTING level instead: one parquet scan over every segment's block
+    files, one ``mapInArrow``, with ``_metadata.file_path`` carrying each
     block's segment so the decode fn resolves the right symbol-table
     namespace (symtab ids are per-segment). Driver cost is O(#segments)
     small meta.json reads — listing cost, not plan cost.
 
     All segments must share one logical schema (they are micro-batches of
-    the same stream); a mismatch raises rather than miscasts.
+    the same stream); a mismatch raises rather than miscasts. A single
+    table is the one-segment case (``decode_table``).
+
+    ``columns`` and ``zone_filters`` behave as in ``decode_table``; both
+    reach the parquet scan, as a pruned ReadSchema and PushedFilters.
 
     Reference lineage: the reference decodes MANY layers from ONE tile
     buffer in a single pass, resolving each layer's own key/value tables
@@ -235,18 +165,24 @@ def decode_table_multi(spark, seg_dirs: list[str],
     if not files:
         # all segments were zero-row tables (no block files written)
         return spark.createDataFrame([], spark_schema)
-    blocks = spark.read.parquet(*files).withColumn(
-        "__src_file", F.input_file_name())
-    if zone_filters:
-        for col, lo, hi in zone_filters:
-            blocks = blocks.filter(
-                F.col(f"mn_{col}").isNull()
-                | ((F.col(f"mn_{col}") <= F.lit(int(hi)))
-                   & (F.col(f"mx_{col}") >= F.lit(int(lo)))))
+    blocks = spark.read.parquet(*files)
+    # zone maps are plain top-level columns: the predicate pushes down to
+    # the parquet scan and prunes whole row groups via their stats — the
+    # cluster-scale descendant of the reference's cheap AABB pre-filter
+    # before expensive work (JtsAdapter.java:232)
+    for col, lo, hi in zone_filters or []:
+        blocks = blocks.filter(
+            F.col(f"mn_{col}").isNull()
+            | ((F.col(f"mn_{col}") <= F.lit(int(hi)))
+               & (F.col(f"mx_{col}") >= F.lit(int(lo)))))
     need = ["part_id", "block_id", "n_rows"] + [f"c_{n}" for n in names]
     if verify_crc:
         need += [f"crc_{n}" for n in names]
-    blocks = blocks.select(*need, "__src_file")
+    # explicit projection -> parquet reads ONLY the requested blob columns.
+    # The source file comes from the scan's hidden _metadata column, which
+    # is deterministic: unlike input_file_name(), it blocks no pushdown.
+    blocks = blocks.select(
+        *need, F.col("_metadata.file_path").alias("__src_file"))
     return blocks.mapInArrow(
         make_multi_decode_fn(schema, symtabs_by_dir, columns, verify_crc),
         spark_schema)

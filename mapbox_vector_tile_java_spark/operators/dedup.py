@@ -176,38 +176,45 @@ def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
     return src.mapInArrow(fn, out_schema)
 
 
+def _lsh_band_keys(num_perm: int, bands: int):
+    """``posexplode`` column of (band, bh) over a ``sig`` column: one row
+    per LSH band, keyed by xxhash64 of the band's signature slice — an
+    8-byte shuffle key whatever the rows per band, at a vanishing (2^-64
+    per bucket) collision risk. The one place the band-key form is
+    decided; every banded join goes through it."""
+    if num_perm % bands:
+        raise ValueError(f"bands={bands} must divide num_perm={num_perm}")
+    r = num_perm // bands
+    return F.posexplode(F.array(*[
+        F.xxhash64(F.slice("sig", b * r + 1, r)) for b in range(bands)
+    ])).alias("band", "bh")
+
+
 def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
                       num_perm: int = 64, bands: int = 16,
                       shingle_k: int = 5, seed: int = 42,
-                      hash_bands: bool = False,
                       work_dir: str | None = None) -> DataFrame:
     """Candidate near-duplicate pairs: docs sharing >=1 LSH band bucket.
 
     Scale path: the only shuffle is the band-bucket join key; bucket sizes
     are bounded by near-duplicate cluster sizes, not corpus size. Returns
-    (id_a, id_b, n_bands) distinct pairs.
+    (id_a, id_b, n_bands) distinct pairs. ``bands`` must divide
+    ``num_perm``.
 
-    Band keys default to the raw signature slice (array<long> equality —
-    exact, and what the DuckDB oracle reproduces from the signature table);
-    hash_bands=True joins on xxhash64(slice) instead, cutting the shuffle key
-    from 8*rows_per_band to 8 bytes at a vanishing (2^-64 per bucket)
-    collision risk — the right trade at 10^12 docs.
+    Band keys are xxhash64 of the signature slice (``_lsh_band_keys``).
+    The pairs equal those of a join on the raw array<long> slice — what
+    the DuckDB oracle reproduces from the signature table — modulo a
+    2^-64-per-bucket hash collision.
 
     The signature stage is materialized to ``work_dir`` parquet (an explicit
     temp table), so the self-join reads it twice from storage instead of
     recomputing the python kernel per side or pinning an executor cache.
     """
-    rows_per_band = num_perm // bands
+    band_keys = _lsh_band_keys(num_perm, bands)
     sigs = _materialize_fp(
         minhash_signatures(df, text_col, id_col, num_perm, shingle_k, seed),
         df.sparkSession, "mvt_minhash_", work_dir)
-    key = ((lambda b: F.xxhash64(F.slice("sig", b * rows_per_band + 1, rows_per_band)))
-           if hash_bands else
-           (lambda b: F.slice("sig", b * rows_per_band + 1, rows_per_band)))
-    banded = sigs.select(
-        "id",
-        F.posexplode(F.array(*[key(b) for b in range(bands)])).alias("band", "bh"),
-    )
+    banded = sigs.select("id", band_keys)
     a, b = banded.alias("a"), banded.alias("b")
     pairs = (a.join(b, (F.col("a.band") == F.col("b.band"))
                     & (F.col("a.bh") == F.col("b.bh"))
@@ -279,8 +286,8 @@ def dedup_incremental(corpus_df: DataFrame, new_df: DataFrame,
     The incremental shape a streaming corpus needs: the corpus side costs
     one scan of its persisted signature index (``build_minhash_index``) —
     no text moves, no kernel runs over old documents. Only the new batch
-    is minhashed. Candidates come from the usual banded join (8-byte
-    xxhash64 band keys, the 10^12-doc shuffle key) restricted to pairs
+    is minhashed. Candidates come from the usual banded join
+    (``_lsh_band_keys``, as in ``minhash_lsh_pairs``) restricted to pairs
     with a new endpoint; every candidate then passes the shared
     ``exact_jaccard_verify`` over corpus ∪ new text, so precision is
     exact — identical contract to ``ngram_jaccard_lsh``, restricted to
@@ -291,24 +298,15 @@ def dedup_incremental(corpus_df: DataFrame, new_df: DataFrame,
     ``minhash_index_append`` the admitted rows.
     """
     p = _read_idx_marker(index_dir)
-    num_perm = p["num_perm"]
-    if num_perm % bands:
-        raise ValueError(f"bands={bands} must divide num_perm={num_perm}")
-    rows_per_band = num_perm // bands
+    band_keys = _lsh_band_keys(p["num_perm"], bands)
     spark = corpus_df.sparkSession
     old_sig = spark.read.parquet(index_dir).withColumn(
         "is_new", F.lit(False))
     new_sig = _materialize_fp(
-        minhash_signatures(new_df, text_col, id_col, num_perm,
+        minhash_signatures(new_df, text_col, id_col, p["num_perm"],
                            p["shingle_k"], p["seed"]),
         spark, "mvt_minhash_inc_").withColumn("is_new", F.lit(True))
-    sigs = old_sig.unionByName(new_sig)
-    key = lambda b: F.xxhash64(F.slice("sig", b * rows_per_band + 1,
-                                       rows_per_band))
-    banded = sigs.select(
-        "id", "is_new",
-        F.posexplode(F.array(*[key(b) for b in range(bands)]))
-         .alias("band", "bh"))
+    banded = old_sig.unionByName(new_sig).select("id", "is_new", band_keys)
     a, b = banded.alias("a"), banded.alias("b")
     cands = (a.join(b, (F.col("a.band") == F.col("b.band"))
                     & (F.col("a.bh") == F.col("b.bh"))
@@ -495,7 +493,6 @@ def ngram_jaccard_lsh(df: DataFrame, text_col: str, id_col: str,
                       num_perm: int = 64, bands: int = 16,
                       shingle_k: int = 5, seed: int = 42,
                       block_rows: int = 512,
-                      hash_bands: bool = True,
                       work_dir: str | None = None,
                       gram_dir: str | None = None) -> DataFrame:
     """Scale-path near-dup detection: minhash-LSH candidate pairs, then
@@ -512,17 +509,12 @@ def ngram_jaccard_lsh(df: DataFrame, text_col: str, id_col: str,
     plan). ``ngram_jaccard_winnow`` is the same composition with winnowing
     fingerprints as the candidate generator.
 
-    ``hash_bands`` defaults to True here (unlike ``minhash_lsh_pairs``,
-    whose raw array<long> band key is what the DuckDB oracle reproduces
-    directly): this IS the scale entry point, and the 8-byte xxhash64 band
-    key is the right shuffle-key size at 10^12 docs. The candidate set is
-    identical to the raw-key set modulo a 2^-64-per-bucket hash collision,
-    and the exact-verify stage makes even that harmless for precision —
-    a colliding non-duplicate pair is measured and dropped.
+    The band keys are ``minhash_lsh_pairs``' hashed slices; a hash
+    collision there is harmless for precision here — a colliding
+    non-duplicate pair is measured by the exact verify and dropped.
     """
     cands = minhash_lsh_pairs(df, text_col, id_col, num_perm, bands,
-                              shingle_k, seed, hash_bands=hash_bands,
-                              work_dir=work_dir)
+                              shingle_k, seed, work_dir=work_dir)
     return exact_jaccard_verify(df, cands, text_col, id_col, k=k,
                                 threshold=threshold, block_rows=block_rows,
                                 gram_dir=gram_dir)

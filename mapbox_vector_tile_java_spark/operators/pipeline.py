@@ -81,12 +81,12 @@ def corpus_clean(df: DataFrame, text_col: str, id_col: str,
     survivors = exact_dedup(good, text_col, id_col)
     if candidate_route == "minhash":
         cands = minhash_lsh_pairs(survivors, text_col, id_col,
-                                  hash_bands=True, work_dir=work_dir)
+                                  work_dir=work_dir)
     elif candidate_route == "winnow":
         cands = winnow_candidate_pairs(survivors, text_col, id_col)
     elif candidate_route == "both":
         cands = (minhash_lsh_pairs(survivors, text_col, id_col,
-                                   hash_bands=True, work_dir=work_dir)
+                                   work_dir=work_dir)
                  .select("id_a", "id_b")
                  .unionByName(winnow_candidate_pairs(
                      survivors, text_col, id_col).select("id_a", "id_b"))

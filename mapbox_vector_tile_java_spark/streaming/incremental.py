@@ -243,20 +243,24 @@ def content_fingerprint(df: DataFrame) -> tuple[int, int]:
     partition + a single-row final combine — the cheapest whole-content
     equality check that does not ship any data anywhere.
 
-    The row hash is a sum of POSITION-BOUND column hashes
-    (xxhash64(ordinal, value)), not one xxhash64 over all columns:
-    Spark's hash functions skip NULL arguments, so the single-call form
-    would hash (NULL, 'a') and ('a', NULL) identically — a null shifted
-    across columns would go undetected, and this fingerprint gates
-    deletion. Binding each column to its ordinal keeps a NULL's position
-    in the row observable (hash(i) is a column-specific constant).
+    The row hash is one xxhash64 over POSITION-BOUND column hashes
+    (xxhash64(ordinal, value)); this fingerprint gates deletion, so each
+    layer closes a blind spot:
+
+    - Spark's hash functions skip NULL arguments, so a single
+      xxhash64(col...) call would hash (NULL, 'a') and ('a', NULL)
+      identically. Binding each column to its ordinal keeps a NULL's
+      position in the row observable (hash(i) is a column-specific
+      constant, never NULL).
+    - A plain SUM of the column hashes would be row-blind: values swapped
+      between rows within one column leave it unchanged. The outer
+      xxhash64 binds the column values of one row together.
     """
     from pyspark.sql import functions as F
 
-    row_hash = sum(
-        (F.xxhash64(F.lit(i), F.col(c)).cast("decimal(38,0)")
-         for i, c in enumerate(df.columns)),
-        start=F.lit(0).cast("decimal(38,0)"))
+    row_hash = F.xxhash64(*[F.xxhash64(F.lit(i), F.col(c))
+                            for i, c in enumerate(df.columns)]
+                          ).cast("decimal(38,0)")
     row = df.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(row_hash).alias("fp")).first()
@@ -270,13 +274,15 @@ def verify_and_reap(spark, out_dir: str) -> list[str]:
     content fingerprints (``content_fingerprint``), and delete the aside
     dir only on an exact match. Returns the reaped aside dirs.
 
-    Raises ``ValueError`` on any mismatch and leaves that aside dir in
-    place — the retired source segments are the recovery path, exactly the
-    discipline the encode commit markers follow (nothing is deleted until
-    the replacement is proven equal). An aside dir whose compacted segment
-    has since itself been compacted away is also left in place (there is
-    nothing to verify against; a later fingerprint chain through the
-    NEWER compaction's own aside dir still covers its content).
+    Every aside dir is checked on its own: matching dirs are reaped even
+    when another one mismatches. Mismatched dirs stay in place — the
+    retired source segments are the recovery path, exactly the discipline
+    the encode commit markers follow (nothing is deleted until the
+    replacement is proven equal) — and, after all dirs are checked, one
+    ``ValueError`` names every one of them. An aside dir whose compacted
+    segment has since itself been compacted away is also left in place
+    (there is nothing to verify against; a later fingerprint chain through
+    the NEWER compaction's own aside dir still covers its content).
     """
     import shutil
 
@@ -285,7 +291,7 @@ def verify_and_reap(spark, out_dir: str) -> list[str]:
     aside_root = os.path.join(out_dir, ".pre_compact")
     if not os.path.isdir(aside_root):
         return []
-    reaped = []
+    reaped, mismatched = [], []
     for name in sorted(os.listdir(aside_root)):
         aside = os.path.join(aside_root, name)
         meta = os.path.join(aside, "promoted.json")
@@ -301,12 +307,16 @@ def verify_and_reap(spark, out_dir: str) -> list[str]:
         want = content_fingerprint(decode_table_multi(spark, srcs))
         got = content_fingerprint(decode_table(spark, comp))
         if want != got:
-            raise ValueError(
+            mismatched.append(
                 f"compacted segment {info['compacted']} does not match its "
                 f"retired sources in {aside}: sources (rows, fp)={want}, "
-                f"compacted={got} — aside dir kept for recovery")
+                f"compacted={got}")
+            continue
         shutil.rmtree(aside)
         reaped.append(aside)
+    if mismatched:
+        raise ValueError("; ".join(mismatched)
+                         + " — aside dirs kept for recovery")
     return reaped
 
 

@@ -65,7 +65,7 @@ def main():
               f"recall {rec:6.4f}  [{time.time() - t0:.1f}s] {note}")
 
     report("minhash (64/16, hashed)",
-           D.minhash_lsh_pairs(docs, "text", "doc_id", hash_bands=True))
+           D.minhash_lsh_pairs(docs, "text", "doc_id"))
     for ms, mdf in [(2, 64), (3, 64), (2, 32), (3, 32), (4, 64)]:
         report(f"winnow ms={ms} max_df={mdf}",
                D.winnow_candidate_pairs(docs, "text", "doc_id",

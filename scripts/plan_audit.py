@@ -53,6 +53,13 @@ AUDITS = [
      "no text column, no kernel); only the new batch runs the minhash "
      "MapInArrow before the banded join and the shared verify kernel",
      ["MapInArrow", "FileScan", "Exchange"]),
+    ("segments_pruned_decode",
+     "zone-pruned multi-segment decode: ONE parquet scan over every "
+     "segment's block files, the mn_/mx_ zone predicate in its "
+     "PushedFilters (pruned blocks' blob bytes are never read), a "
+     "ReadSchema holding only the needed blob/crc columns, one MapInArrow "
+     "decode",
+     ["PushedFilters", "ReadSchema", "MapInArrow"]),
 ]
 
 HEADER = """# Physical-plan audit (sf0.01, local[8])
@@ -63,6 +70,21 @@ scans, partial aggregation before every exchange, no accidental shuffles.
 Regenerate with `python scripts/plan_audit.py` (this file's generator).
 
 """
+
+
+WIDTH = 150  # chars of a plan line shown per window
+
+
+def clip(line: str, grep: list[str]) -> str:
+    """The line's first WIDTH chars, plus a WIDTH-char window at every grep
+    term that cut hides (a scan's PushedFilters and ReadSchema sit at the
+    end of a long line)."""
+    parts = [line[:WIDTH]]
+    for g in grep:
+        at = line.find(g)
+        if at + len(g) > WIDTH:
+            parts.append("  ... " + line[at:at + WIDTH])
+    return "\n".join(parts)
 
 
 def main():
@@ -76,7 +98,7 @@ def main():
     for name, note, grep in AUDITS:
         p = qs[name](spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
         lines = [l for l in p.split("\n") if any(g in l for g in grep)]
-        body = "\n".join(l.strip()[:150] for l in lines[:12])
+        body = "\n".join(clip(l.strip(), grep) for l in lines[:12])
         sections.append(f"## {name}\n\n{note}\n\n```\n{body}\n```\n")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(repo, "docs", "PLANS.md"), "w") as f:

@@ -1,6 +1,10 @@
-"""Bit-exact arrow array comparison (NaN == NaN when bits match)."""
+"""Test helpers: bit-exact arrow array comparison (NaN == NaN when bits
+match) and physical-plan text."""
 
 from __future__ import annotations
+
+import contextlib
+import io
 
 import numpy as np
 import pyarrow as pa
@@ -37,3 +41,18 @@ def assert_bit_equal(a: pa.Array, b: pa.Array) -> None:
         assert_bit_equal(an.cast(lt), bn.cast(lt))
     else:
         assert an.equals(bn), f"value mismatch for {t}: {an[:5]} vs {bn[:5]}"
+
+
+def formatted_plan(df) -> str:
+    """``df.explain("formatted")`` as a string."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def assert_zone_pushed(df, col: str) -> None:
+    """The zone predicate on ``mn_<col>`` reaches the parquet scan."""
+    txt = formatted_plan(df)
+    assert any("PushedFilters" in l and f"mn_{col}" in l
+               for l in txt.splitlines()), txt

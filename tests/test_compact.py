@@ -17,6 +17,8 @@ from mapbox_vector_tile_java_spark.sources.webtext import webtext_df
 from mapbox_vector_tile_java_spark.streaming.incremental import (
     compact_segments, decode_segments, list_segments, promote_compacted)
 
+from helpers import assert_zone_pushed, formatted_plan
+
 
 def _rows(df):
     return sorted(
@@ -62,15 +64,9 @@ def test_multi_segment_decode_flat_plan_and_pruning(spark, segmented):
     """decode_segments is ONE scan + ONE mapInArrow regardless of segment
     count (no per-segment union in the plan), and column pruning reaches
     that scan (unrequested blob columns never leave parquet)."""
-    import contextlib
-    import io
-
     root, src = segmented
     dec = decode_segments(spark, root, columns=["url", "lang"])
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        dec.explain("formatted")
-    txt = buf.getvalue()
+    txt = formatted_plan(dec)
     # formatted explain names each node twice (tree line + details header):
     # ONE scan node == 2 mentions; a per-segment union would show 6
     assert txt.count("Scan parquet") == 2, txt
@@ -106,6 +102,9 @@ def test_multi_segment_zone_filter_prunes_and_preserves(spark, tmp_path):
     segs = list_segments(root)
     pruned = decode_table_multi(
         spark, segs, zone_filters=[("warc_ts", bounds["lo"], cut)])
+    # the zone predicate reaches the scan: pruned blocks' blob bytes are
+    # never read, not just never decoded
+    assert_zone_pushed(pruned, "warc_ts")
     got = sorted(r["url"] for r in pruned.where(us <= cut).collect())
     want = sorted(r["url"] for r in src.where(us <= cut).collect())
     assert got == want and len(got) > 0
@@ -125,8 +124,6 @@ def test_fifty_segments_one_scan_and_compaction(spark, tmp_path):
     micro-batch — the decoder must namespace symbol tables per segment, so
     50 segments with identical symtab ids but distinct paths is also the
     collision-hardest layout for the path-based resolution."""
-    import contextlib
-    import io
     import shutil
 
     root = str(tmp_path / "many")
@@ -138,10 +135,7 @@ def test_fifty_segments_one_scan_and_compaction(spark, tmp_path):
     assert len(list_segments(root)) == 50
 
     dec = decode_segments(spark, root)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        dec.explain("formatted")
-    txt = buf.getvalue()
+    txt = formatted_plan(dec)
     # formatted explain names each node twice (tree + details): ONE scan
     # node == 2 mentions; a plan-level union chain would show ~100
     assert txt.count("Scan parquet") == 2, txt
@@ -292,7 +286,8 @@ def test_maintain_table_full_round(spark, tmp_path):
 def test_verify_and_reap_deletes_only_on_match(spark, tmp_path):
     """verify_and_reap fingerprint-compares the compacted segment against
     its retired sources and deletes the aside dir only on an exact match;
-    a mismatch raises and keeps the sources as the recovery path."""
+    a mismatch keeps the sources as the recovery path, does not stop a
+    healthy aside dir after it from being reaped, and raises at the end."""
     import json
 
     from mapbox_vector_tile_java_spark.streaming.incremental import (
@@ -331,9 +326,24 @@ def test_verify_and_reap_deletes_only_on_match(spark, tmp_path):
     info["segments"].append("segment=9")
     with open(meta, "w") as f:
         json.dump(info, f)
-    with pytest.raises(ValueError, match="does not match"):
+
+    # third compaction, healthy, its aside dir renamed to sort AFTER the
+    # tampered one: the mismatch must not stop it from being reaped
+    encode_webtext(webtext_df(spark, 60, seed=6, partitions=1),
+                   os.path.join(root, "segment=10"), n_parts=1)
+    dst3 = str(tmp_path / "compacted3")
+    compact_segments(spark, root, dst3, n_parts=1, segments=["segment=10"])
+    promote_compacted(root, dst3)
+    healthy = os.path.join(aside_root, "~healthy")
+    new_aside, = [d for d in os.listdir(aside_root)
+                  if os.path.join(aside_root, d) != aside]
+    os.rename(os.path.join(aside_root, new_aside), healthy)
+    assert sorted(os.listdir(aside_root))[-1] == "~healthy"
+    with pytest.raises(ValueError, match="does not match") as exc:
         verify_and_reap(spark, root)
+    assert aside in str(exc.value) and healthy not in str(exc.value)
     assert os.path.isdir(aside)  # kept for recovery
+    assert not os.path.exists(healthy)  # verified and reaped
 
     # fingerprint function itself: order-independence + multiset sensitivity
     a = webtext_df(spark, 200, seed=8, partitions=2)
@@ -345,6 +355,11 @@ def test_verify_and_reap_deletes_only_on_match(spark, tmp_path):
     na = spark.createDataFrame([(None, "a")], "x string, y string")
     nb = spark.createDataFrame([("a", None)], "x string, y string")
     assert content_fingerprint(na) != content_fingerprint(nb)
+    # values swapped between rows within one column must be observable
+    # (a plain sum of column hashes is row-blind)
+    sa = spark.createDataFrame([(1, "x"), (2, "y")], "k int, v string")
+    sb = spark.createDataFrame([(1, "y"), (2, "x")], "k int, v string")
+    assert content_fingerprint(sa) != content_fingerprint(sb)
 
 
 def test_promote_refuses_missing_snapshot_segment(spark, segmented, tmp_path):

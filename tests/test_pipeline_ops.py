@@ -194,15 +194,6 @@ def test_embedding_neardup_ragged_raises(spark):
                                   threshold=0.0, block_rows=100).collect()
 
 
-def test_minhash_hash_bands_equivalent(spark, docs):
-    exact = {(r["id_a"], r["id_b"], r["n_bands"])
-             for r in D.minhash_lsh_pairs(docs, "text", "doc_id").collect()}
-    hashed = {(r["id_a"], r["id_b"], r["n_bands"])
-              for r in D.minhash_lsh_pairs(docs, "text", "doc_id",
-                                           hash_bands=True).collect()}
-    assert exact == hashed
-
-
 def test_brute_force_topk(spark, vectors):
     out = S.brute_force_topk(vectors, "embedding", "vec_id", [0], k=3).collect()
     assert out[0]["neighbor_id"] == 99 and out[0]["rank"] == 1
@@ -604,7 +595,9 @@ def test_dedup_incremental_matches_batch_recompute(spark, tmp_path):
     """Incremental dedup against the persisted signature index returns
     exactly the batch route's verified pairs restricted to a new endpoint
     (same signatures, same banding, same exact verify) — plus the index
-    protocol: append extends the corpus side; a bands mismatch raises."""
+    protocol: append extends the corpus side; a band count that does not
+    divide num_perm raises (here and in the batch route), rather than
+    silently dropping the trailing signature values."""
     import pytest as _pytest
 
     docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -636,6 +629,8 @@ def test_dedup_incremental_matches_batch_recompute(spark, tmp_path):
     assert got2 == want2
     with _pytest.raises(ValueError, match="must divide"):
         D.dedup_incremental(corpus, new, "text", "doc_id", idx, bands=13)
+    with _pytest.raises(ValueError, match="must divide"):
+        D.minhash_lsh_pairs(docs, "text", "doc_id", bands=10)
 
 
 def test_corpus_clean_candidate_routes(spark):

@@ -21,6 +21,8 @@ from mapbox_vector_tile_java_spark.operators.verify import verify_roundtrip
 from mapbox_vector_tile_java_spark.plans.partitioning import plan_generic, plan_webtext
 from mapbox_vector_tile_java_spark.sources.webtext import webtext_df
 
+from helpers import assert_zone_pushed
+
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -75,6 +77,7 @@ def test_zone_map_pruning(spark, tmp_path):
     lo = 1_600_000_000_000_000
     hi = lo + 737 * 2000  # first ~2000 rows by construction
     pruned = decode_table(spark, out, zone_filters=[("warc_ts", lo, hi)])
+    assert_zone_pushed(pruned, "warc_ts")
     n = pruned.count()
     assert 0 < n < 10_000, n
     # disjoint range prunes everything
