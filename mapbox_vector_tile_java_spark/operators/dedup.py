@@ -281,17 +281,31 @@ def dedup_incremental(corpus_df: DataFrame, new_df: DataFrame,
                       block_rows: int = 512,
                       gram_dir: str | None = None) -> DataFrame:
     """True near-dup pairs (id_a, id_b, jaccard) with at least one NEW
-    endpoint: new-vs-corpus and new-vs-new, exactly verified.
+    endpoint: new-vs-corpus and new-vs-new, exactly verified — identical
+    contract to ``ngram_jaccard_lsh``, restricted to pairs the new batch
+    introduces.
 
-    The incremental shape a streaming corpus needs: the corpus side costs
-    one scan of its persisted signature index (``build_minhash_index``) —
-    no text moves, no kernel runs over old documents. Only the new batch
-    is minhashed. Candidates come from the usual banded join
-    (``_lsh_band_keys``, as in ``minhash_lsh_pairs``) restricted to pairs
-    with a new endpoint; every candidate then passes the shared
-    ``exact_jaccard_verify`` over corpus ∪ new text, so precision is
-    exact — identical contract to ``ngram_jaccard_lsh``, restricted to
-    pairs the new batch introduces.
+    The incremental shape a streaming corpus needs: every kernel and every
+    shuffle is sized by the batch and its candidates, not by the corpus.
+
+    - Signatures: only the new batch is minhashed. The corpus side is one
+      scan of its persisted signature index (``build_minhash_index``).
+    - Candidates: the ``index ∪ batch`` band keys (``_lsh_band_keys``)
+      probe a broadcast of the batch's own band keys — ``bands`` rows per
+      batch doc (16 at the default), so the broadcast is bounded by the
+      batch. The index is never shuffled on band keys and old×old bucket
+      pairs are never enumerated. The distinct (least, greatest) pairs
+      are landed as a temp table (``_materialize_fp``).
+    - Verify: the corpus ∪ batch text is restricted to the candidates'
+      endpoints (a broadcast left-semi join on the distinct
+      id_a ∪ id_b, in the JVM) before the gram kernel runs, so no Python
+      kernel sees a corpus doc that is in no candidate pair. A supplied
+      ``gram_dir`` is the corpus-wide record cache shared with the other
+      verified routes: it is built (from corpus ∪ batch) or read whole,
+      never from the endpoint subset, and its records are semi-joined to
+      the endpoints instead. An endpoint whose text has length >= k but
+      has no cached record means the cache was built from another corpus;
+      that raises ``ValueError`` rather than silently dropping its pairs.
 
     Ids must be unique across corpus and batch (the table's primary key).
     Accepted workflow: drop/keep decisions from the returned pairs, then
@@ -300,28 +314,46 @@ def dedup_incremental(corpus_df: DataFrame, new_df: DataFrame,
     p = _read_idx_marker(index_dir)
     band_keys = _lsh_band_keys(p["num_perm"], bands)
     spark = corpus_df.sparkSession
-    old_sig = spark.read.parquet(index_dir).withColumn(
-        "is_new", F.lit(False))
     new_sig = _materialize_fp(
         minhash_signatures(new_df, text_col, id_col, p["num_perm"],
                            p["shingle_k"], p["seed"]),
-        spark, "mvt_minhash_inc_").withColumn("is_new", F.lit(True))
-    banded = old_sig.unionByName(new_sig).select("id", "is_new", band_keys)
-    a, b = banded.alias("a"), banded.alias("b")
-    cands = (a.join(b, (F.col("a.band") == F.col("b.band"))
-                    & (F.col("a.bh") == F.col("b.bh"))
-                    & (F.col("a.id") < F.col("b.id"))
-                    & (F.col("a.is_new") | F.col("b.is_new")))
-             .select(F.col("a.id").alias("id_a"),
-                     F.col("b.id").alias("id_b"))
-             .distinct())
+        spark, "mvt_minhash_inc_")
+    probe = (spark.read.parquet(index_dir).unionByName(new_sig)
+             .select("id", band_keys))
+    batch = F.broadcast(new_sig.select(F.col("id").alias("nid"), band_keys))
+    cands = _materialize_fp(
+        probe.join(batch, ["band", "bh"])
+             .where(F.col("id") != F.col("nid"))
+             .select(F.least("id", "nid").alias("id_a"),
+                     F.greatest("id", "nid").alias("id_b"))
+             .distinct(),
+        spark, "mvt_cands_inc_")
+    ends = F.broadcast(cands.select(F.col("id_a").alias("id"))
+                       .union(cands.select(F.col("id_b").alias("id")))
+                       .distinct())
     both = (corpus_df.select(F.col(id_col).cast("long").alias(id_col),
                              text_col)
             .unionByName(new_df.select(
                 F.col(id_col).cast("long").alias(id_col), text_col)))
-    return exact_jaccard_verify(both, cands, text_col, id_col, k=k,
-                                threshold=threshold, block_rows=block_rows,
-                                gram_dir=gram_dir)
+    docs = both.join(ends.withColumnRenamed("id", id_col), id_col,
+                     "left_semi")
+    if gram_dir is None:
+        fp = _materialize_fp(_gram_record_df(docs, text_col, id_col, k),
+                             spark, "mvt_gramrec_")
+    else:
+        # the cache is shared with the other verified routes: never build
+        # it from the endpoint subset
+        fp = build_gram_records(both, text_col, id_col, k, gram_dir).join(
+            ends, "id", "left_semi")
+        missing = (docs.where(F.length(text_col) >= k)
+                   .select(F.col(id_col).alias("id"))
+                   .join(fp, "id", "left_anti").count())
+        if missing:
+            raise ValueError(
+                f"gram_dir {gram_dir!r} has no record for {missing} "
+                f"candidate endpoint(s) with text of length >= {k}: it was "
+                f"built from another corpus; rebuild it over corpus ∪ batch")
+    return _verify_records(fp, cands, k, threshold, block_rows)
 
 
 def _spread(df: DataFrame, n_parts: int | None = None) -> DataFrame:
@@ -573,18 +605,25 @@ def exact_jaccard_verify(df: DataFrame, cands: DataFrame, text_col: str,
     hashing), and double division + half-away rounding match the ANSI
     oracle bit-for-bit.
     """
+    if gram_dir is not None:
+        fp = build_gram_records(df, text_col, id_col, k, gram_dir)
+    else:
+        fp = _materialize_fp(_gram_record_df(df, text_col, id_col, k),
+                             df.sparkSession, "mvt_gramrec_")
+    return _verify_records(fp, cands, k, threshold, block_rows)
+
+
+def _verify_records(fp: DataFrame, cands: DataFrame, k: int,
+                    threshold: float, block_rows: int) -> DataFrame:
+    """Gram records (id, cnt, rec) + candidate pairs (id_a, id_b) ->
+    verified (id_a, id_b, jaccard >= threshold): the block-pair verify
+    ``exact_jaccard_verify`` describes, on records its caller supplies."""
     from pyspark.sql.pandas.types import from_arrow_schema
     from pyspark.sql.types import (BinaryType, IntegerType, StructField,
                                    StructType)
 
     width = 4 * k
-    spark = df.sparkSession
-    if gram_dir is not None:
-        fp = build_gram_records(df, text_col, id_col, k, gram_dir)
-    else:
-        fp = _materialize_fp(_gram_record_df(df, text_col, id_col, k),
-                             spark, "mvt_gramrec_")
-    n = fp.count()  # parquet metadata count on the materialized stage
+    n = fp.count()  # a parquet metadata count when fp is a landed stage
     n_blocks = max(1, -(-n // block_rows))
     blk = lambda c: F.pmod(F.xxhash64(c), F.lit(n_blocks)).cast("int")
 

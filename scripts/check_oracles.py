@@ -2,10 +2,16 @@
 on DuckDB, compare row-count + order-insensitive exact values.
 
 Usage: python scripts/check_oracles.py [sf_dir] [query ...]
+
+sf_dir defaults to __spark_entry__.ORACLE_SF_DIR: the fixture-backed
+oracles read the minhash, simhash, SRP and IVF tables that
+``_write_oracle_fixtures`` precomputes from that scale, so any other
+sf_dir prints a warning first.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -32,11 +38,15 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def main():
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    only = set(sys.argv[2:])
-
     import __spark_entry__ as E
     from mapbox_vector_tile_java_spark.session import get_spark
+
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else E.ORACLE_SF_DIR
+    only = set(sys.argv[2:])
+    if os.path.realpath(sf_dir) != os.path.realpath(E.ORACLE_SF_DIR):
+        print(f"warning: sf_dir {sf_dir} is not ORACLE_SF_DIR "
+              f"{E.ORACLE_SF_DIR}; fixture-backed oracles read the latter, "
+              f"so their queries FAIL here without a defect")
 
     spark = get_spark("oracle-check", cores=8)
     con = duckdb.connect()

@@ -48,11 +48,13 @@ AUDITS = [
      "exchange",
      ["FileScan", "ReadSchema", "HashAggregate", "Exchange"]),
     ("dedup_incremental",
-     "incremental dedup: the corpus side is a parquet scan of the "
-     "persisted signature index (FileScan over mvt_mh_idx — id+sig only, "
-     "no text column, no kernel); only the new batch runs the minhash "
-     "MapInArrow before the banded join and the shared verify kernel",
-     ["MapInArrow", "FileScan", "Exchange"]),
+     "incremental dedup in O(batch): the band join (index ∪ batch band "
+     "keys probing a broadcast of the batch's band keys) runs and lands "
+     "before this plan, so here it is the FileScan of mvt_cands_inc_; the "
+     "distinct endpoints of those candidates are broadcast into a "
+     "BroadcastHashJoin LeftSemi that cuts the shared gram-record cache "
+     "to the endpoint docs before the block-pair verify",
+     ["BroadcastHashJoin", "LeftSemi", "mvt_cands_inc_"]),
     ("segments_pruned_decode",
      "zone-pruned multi-segment decode: ONE parquet scan over every "
      "segment's block files, the mn_/mx_ zone predicate in its "

@@ -7,6 +7,7 @@ import pytest
 
 from pyspark.sql import Row, functions as F
 
+from __spark_entry__ import ORACLE_SF_DIR
 from mapbox_vector_tile_java_spark.operators import dedup as D
 from mapbox_vector_tile_java_spark.operators import similarity as S
 from mapbox_vector_tile_java_spark.operators.multimodal import (
@@ -591,15 +592,50 @@ def test_corpus_clean_composition(spark):
     assert kept == {1, 5}
 
 
-def test_dedup_incremental_matches_batch_recompute(spark, tmp_path):
+def _broadcast_side_scans(plan: str) -> list[str]:
+    """File locations of the parquet scans under the BroadcastExchange of
+    a ``formatted`` plan (the build side of its broadcast join)."""
+    import re
+
+    tree, _, details = plan.partition("\n\n\n")
+    lines = tree.splitlines()
+    at = next(i for i, l in enumerate(lines) if "BroadcastExchange" in l)
+    col = lines[at].index("BroadcastExchange")
+    sub = []
+    for l in lines[at + 1:]:
+        if re.search(r"[A-Za-z]", l).start() <= col:
+            break
+        sub.append(l)
+    return [re.search(rf"\({i}\) Scan parquet.*?Location: [^\[]*\[([^\]]*)\]",
+                      details, re.S).group(1)
+            for i in re.findall(r"Scan parquet\s+\((\d+)\)", "\n".join(sub))]
+
+
+def test_dedup_incremental_matches_batch_recompute(spark, tmp_path,
+                                                   monkeypatch):
     """Incremental dedup against the persisted signature index returns
     exactly the batch route's verified pairs restricted to a new endpoint
     (same signatures, same banding, same exact verify) — plus the index
     protocol: append extends the corpus side; a band count that does not
     divide num_perm raises (here and in the batch route), rather than
-    silently dropping the trailing signature values."""
-    import pytest as _pytest
+    silently dropping the trailing signature values.
 
+    Plan evidence for the O(batch) shape: the band join is a
+    BroadcastHashJoin whose broadcast side scans only the batch's
+    signatures (the index is on the probe side and the one shuffle is the
+    pairs' distinct, never the band keys), and the gram kernel's input is
+    a LeftSemi join of the text to the candidate endpoints."""
+    import pytest as _pytest
+    from helpers import formatted_plan
+
+    landed = {}
+    materialize = D._materialize_fp
+
+    def spy(df, spark_, prefix, work_dir=None):
+        landed[prefix] = df
+        return materialize(df, spark_, prefix, work_dir)
+
+    monkeypatch.setattr(D, "_materialize_fp", spy)
     docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
             .select("doc_id", "text"))
     corpus = docs.where("doc_id < 300")
@@ -608,6 +644,14 @@ def test_dedup_incremental_matches_batch_recompute(spark, tmp_path):
     D.build_minhash_index(corpus, "text", "doc_id", idx)
     got = {(r.id_a, r.id_b, r.jaccard) for r in
            D.dedup_incremental(corpus, new, "text", "doc_id", idx).collect()}
+    band_join = formatted_plan(landed["mvt_cands_inc_"])
+    assert "BroadcastHashJoin Inner" in band_join, band_join
+    build = _broadcast_side_scans(band_join)
+    assert build and all("mvt_minhash_inc_" in loc for loc in build), build
+    assert idx in band_join and not any(idx in loc for loc in build)
+    assert all("hashpartitioning(id_a" in l for l in band_join.splitlines()
+               if "hashpartitioning" in l), band_join
+    assert "LeftSemi" in formatted_plan(landed["mvt_gramrec_"])
     full = docs.where("doc_id < 400")
     want = {(r.id_a, r.id_b, r.jaccard) for r in
             D.ngram_jaccard_lsh(full, "text", "doc_id", k=3,
@@ -631,6 +675,43 @@ def test_dedup_incremental_matches_batch_recompute(spark, tmp_path):
         D.dedup_incremental(corpus, new, "text", "doc_id", idx, bands=13)
     with _pytest.raises(ValueError, match="must divide"):
         D.minhash_lsh_pairs(docs, "text", "doc_id", bands=10)
+
+
+def test_dedup_incremental_keeps_shared_gram_cache_corpus_wide(spark,
+                                                               tmp_path):
+    """A gram_dir handed to dedup_incremental is the corpus-wide record
+    cache the other verified routes share: it must be built over
+    corpus ∪ batch, never over the batch's candidate endpoints only, or a
+    later route reading it drops every pair whose docs were not
+    endpoints."""
+    docs = (spark.read.parquet(f"{ORACLE_SF_DIR}/documents.parquet")
+            .select("doc_id", "text"))
+    corpus = docs.where("doc_id < 300")
+    new = docs.where("doc_id >= 300")
+    idx, g = str(tmp_path / "mhidx"), str(tmp_path / "grams")
+    D.build_minhash_index(corpus, "text", "doc_id", idx)
+    D.dedup_incremental(corpus, new, "text", "doc_id", idx,
+                        gram_dir=g).collect()
+    cached = set(D.ngram_jaccard_lsh(docs, "text", "doc_id",
+                                     gram_dir=g).collect())
+    assert cached == set(D.ngram_jaccard_lsh(docs, "text",
+                                             "doc_id").collect()) and cached
+
+
+def test_dedup_incremental_stale_gram_cache_raises(spark, tmp_path):
+    """A gram_dir built from the corpus alone has no record for the new
+    batch's docs; verifying against it would silently drop every pair
+    with a new endpoint, so dedup_incremental raises and names the
+    count."""
+    docs = (spark.read.parquet(f"{ORACLE_SF_DIR}/documents.parquet")
+            .select("doc_id", "text"))
+    corpus = docs.where("doc_id < 300")
+    new = docs.where("doc_id >= 300 and doc_id < 400")
+    idx, g = str(tmp_path / "mhidx"), str(tmp_path / "grams")
+    D.build_minhash_index(corpus, "text", "doc_id", idx)
+    D.build_gram_records(corpus, "text", "doc_id", 3, g)
+    with pytest.raises(ValueError, match=r"no record for \d+ candidate"):
+        D.dedup_incremental(corpus, new, "text", "doc_id", idx, gram_dir=g)
 
 
 def test_corpus_clean_candidate_routes(spark):
